@@ -19,10 +19,12 @@ Scale path (implemented below as ``build_bloom_shards`` /
 by ``pmod(url_hash, n_shards)`` into a bloom-shard DataFrame so NO full
 bitmap ever materializes on the driver or in a broadcast — the probe is
 a cogroup of (candidates grouped by shard) with (shard bitmaps), each
-task holding exactly one shard's bitmap.  Broadcast stays viable to
-~1e9 keys (1.2 GB at 1% fpp); beyond that the shard table is the only
-form that fits: at 1e10 keys / 4096 shards each shard holds ~2.4M keys
-(~2.9 MB bitmap at 1% fpp), 12 GB total spread across executors.
+task holding exactly one shard's bitmap.  The crawl driver switches to
+it once a full bitmap would outgrow Spark's own broadcast limit
+(``spark.sql.autoBroadcastJoinThreshold``); it is the only form that
+fits the design point: at 1e10 keys / 4096 shards each shard holds
+~2.4M keys (~2.9 MB bitmap at 1% fpp), 12 GB total spread across
+executors.
 """
 
 from __future__ import annotations
@@ -56,11 +58,16 @@ class BloomFilter:
             (self.m_bits + 63) // 64, dtype=_U64)
 
     @staticmethod
-    def sized_for(n: int, fpp: float = 0.01) -> "BloomFilter":
+    def bits_for(n: int, fpp: float = 0.01) -> tuple:
+        """(m_bits, k) for ``n`` keys at ``fpp``, without allocating."""
         n = max(n, 1)
         m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
         k = max(1, round(m / n * math.log(2)))
-        return BloomFilter(m, k)
+        return m, k
+
+    @staticmethod
+    def sized_for(n: int, fpp: float = 0.01) -> "BloomFilter":
+        return BloomFilter(*BloomFilter.bits_for(n, fpp))
 
     def _positions(self, hashes: np.ndarray):
         h1 = hashes.astype(np.int64).view(_U64)
@@ -263,8 +270,8 @@ def cover_all_shards(shards: DataFrame, n_shards: int) -> DataFrame:
 
 def prune_with_bloom_shards(candidates: DataFrame, seen: DataFrame,
                             shards: DataFrame, hash_col: str = "url_hash",
-                            key_col: str = "url", n_shards: int = 64,
-                            cache_registry: list | None = None) -> DataFrame:
+                            key_col: str = "url",
+                            n_shards: int = 64) -> DataFrame:
     """Sharded twin of ``prune_with_bloom``: rows of ``candidates``
     definitely absent from ``seen``, with the bloom probe executed as a
     cogroup against the shard table — no broadcast, no driver bitmap.

@@ -41,43 +41,28 @@ from ..functions.udfs import canonicalize_url, extract_pages, host_col, with_url
 from ..sources import schemas
 from ..sources.tables import TableStore
 from . import entities, scheduler
-from .bloom import (build_bloom, build_bloom_shards, cover_all_shards,
-                    prune_with_bloom, prune_with_bloom_shards,
-                    update_bloom_shards)
+from .bloom import (BloomFilter, build_bloom, build_bloom_shards,
+                    cover_all_shards, prune_with_bloom,
+                    prune_with_bloom_shards, update_bloom_shards)
 
 PRIORITY_DECAY = 0.8
+
+
+def _bloom_capacity(known_estimate: int) -> int:
+    """Key capacity of a full seen-bloom build: 4x the frontier estimate,
+    so incremental waves amortize rebuilds geometrically."""
+    return max(4 * known_estimate, 100_000)
 
 
 @dataclass
 class CrawlConfig:
     max_depth: int = 3
     max_waves: int = 100
+    # Target false-positive rate of the seen-bloom.  Its form follows
+    # from its size (see _shard_seen_filter): a broadcast bitmap while it
+    # fits under spark.sql.autoBroadcastJoinThreshold, a table of
+    # spark.sql.shuffle.partitions bitmap shards beyond that.
     bloom_fpp: float = 0.01
-    # Above this batch size the wave stops materializing URLs on the
-    # driver: the fetch-sim switches from a broadcast url-set filter
-    # INSIDE the extract UDF (Arrow-fast-path, see extract_pages) to a
-    # distributed left_semi join of pages ⨝ batch urls.  At the 10^10
-    # design point a wave can hold millions of URLs; collecting them to
-    # the driver each wave is a GC/memory bottleneck and serializes the
-    # wave start.
-    url_collect_max: int = 100_000
-    # Above this seen-set estimate the per-executor broadcast bitmap is
-    # replaced by the sharded bloom table: the bitmap is cogroup-probed
-    # shard-by-shard and never exists whole on the driver or in a
-    # broadcast (a 10^10-key bitmap at 1% fpp is ~12 GB — per executor
-    # if broadcast, ~3 MB per task if sharded).
-    bloom_shard_min: int = 2_000_000
-    bloom_n_shards: int = 64
-    # Which approximate membership structure backs the SHARDED seen
-    # filter: "bloom" (default — cheapest build, OR-mergeable) or
-    # "cuckoo" (crawl/cuckoo.py — 16-bit fingerprints in 4-slot
-    # buckets: ~100x lower fpp at comparable space AND supports
-    # deletion, the operation a bloom bit cannot do).  Both share the
-    # identical cogroup probe + exact confirm-join contract, so the
-    # crawl outcome is bit-identical either way (pinned by parity
-    # test).  The broadcast (small-crawl) regime always uses the bloom
-    # — cuckoo's advantages only matter at shard scale.
-    seen_filter: str = "bloom"
     # Every K waves, bin-pack the small per-wave append dirs of the
     # append-heavy tables (Iceberg rewrite_data_files analog) and re-pin
     # the checkpoint on the compacted snapshots.  0 = off.  At the 10^10
@@ -95,12 +80,6 @@ class CrawlConfig:
     # rules (is_url_allowed) when enabled.
     url_filter: bool = False
     blocked_hosts: tuple = ()
-    # Batch size above which wave_order switches from the single global
-    # window to the distributed range-partition + offset strategy (see
-    # scheduler.wave_order).  0 forces distributed for any batch — used
-    # by warmup runs so even tiny waves exercise (and JIT-warm) the
-    # scale path and never emit the single-partition WindowExec warning.
-    wave_order_threshold: int = 2048
 
 
 class CrawlDriver:
@@ -114,17 +93,24 @@ class CrawlDriver:
         self.catalog_items = catalog_items
         self.config = config or CrawlConfig()
         self._catalog_df = None
-        # broadcast-regime seen-bloom, maintained incrementally across
-        # waves (see _bloom_for_wave): the bitmap object, the highest
-        # discovered_wave it covers, and the key capacity it was sized for
+        self._drop_held_blooms()
+
+    def _drop_held_blooms(self) -> None:
+        """Forget the seen-blooms kept across waves, so the next wave
+        full-builds over the pinned frontier."""
+        # broadcast regime (see _bloom_for_wave): the bitmap object, the
+        # highest discovered_wave it covers, and the key capacity it was
+        # sized for
         self._bloom = None
         self._bloom_covers = -1
         self._bloom_capacity = 0
-        # sharded-regime twin: a localCheckpoint-pinned shard table kept
-        # across waves and OR-updated with each wave's frontier delta
+        # sharded regime: a localCheckpoint-pinned shard table kept across
+        # waves and OR-updated with each wave's frontier delta, plus the
+        # shard count it was built with
         self._bloom_shards = None
         self._shards_covers = -1
         self._shards_capacity = 0
+        self._shards_n = 0
 
     @property
     def catalog_df(self) -> DataFrame:
@@ -154,12 +140,7 @@ class CrawlDriver:
         t0 = time.time()
         # a re-bootstrap replaces the frontier wholesale: drop any held
         # incremental bloom so wave 1 rebuilds over the new seed set
-        self._bloom = None
-        self._bloom_covers = -1
-        self._bloom_capacity = 0
-        self._bloom_shards = None
-        self._shards_covers = -1
-        self._shards_capacity = 0
+        self._drop_held_blooms()
         if isinstance(seed_urls, DataFrame):
             df = seed_urls.select("url")
             n_estimate = None
@@ -224,7 +205,7 @@ class CrawlDriver:
         rebuilds geometrically."""
         bf = self._bloom
         if bf is None or known_estimate > self._bloom_capacity:
-            capacity = max(4 * known_estimate, 100_000)
+            capacity = _bloom_capacity(known_estimate)
             bf = build_bloom(frontier, "url_hash", capacity,
                              self.config.bloom_fpp)
             self._bloom_capacity = capacity
@@ -253,41 +234,41 @@ class CrawlDriver:
         exactly where the old full rebuild ran.  Same invalidation
         triggers as the broadcast form (fresh driver, recrawl, capacity
         outgrown -> full rebuild, sized 4x and covering every shard id so
-        incremental updates never miss a shard row)."""
-        n_shards = self.config.bloom_n_shards
-        if self.config.seen_filter == "cuckoo":
-            from .cuckoo import (build_cuckoo_shards,
-                                 cover_all_cuckoo_shards,
-                                 update_cuckoo_shards)
-
-            def full_build(df, capacity):
-                return cover_all_cuckoo_shards(
-                    build_cuckoo_shards(df, "url_hash", capacity,
-                                        n_shards=n_shards), n_shards)
-
-            incr_update = update_cuckoo_shards
-        else:
-            def full_build(df, capacity):
-                return cover_all_shards(
-                    build_bloom_shards(df, "url_hash", capacity,
-                                       n_shards=n_shards,
-                                       fpp=self.config.bloom_fpp), n_shards)
-
-            incr_update = update_bloom_shards
+        incremental updates never miss a shard row).  A full build takes
+        its shard count from ``spark.sql.shuffle.partitions``; the held
+        table keeps that count until the next full build."""
         held = self._bloom_shards
         if held is None or known_estimate > self._shards_capacity:
-            capacity = max(4 * known_estimate, 100_000)
-            shards = full_build(frontier, capacity)
+            capacity = _bloom_capacity(known_estimate)
+            n_shards = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            shards = cover_all_shards(
+                build_bloom_shards(frontier, "url_hash", capacity,
+                                   n_shards=n_shards,
+                                   fpp=self.config.bloom_fpp), n_shards)
             self._shards_capacity = capacity
+            self._shards_n = n_shards
         else:
             delta = (frontier
                      .filter(F.col("discovered_wave") > self._shards_covers)
                      .select("url_hash"))
-            shards = incr_update(held, delta, "url_hash", n_shards)
+            shards = update_bloom_shards(held, delta, "url_hash",
+                                         self._shards_n)
         shards = shards.localCheckpoint(eager=False)
         self._bloom_shards = shards
         self._shards_covers = wave - 1
         return shards
+
+    def _shard_seen_filter(self, known_estimate: int) -> bool:
+        """True when a full bloom build at this estimate would exceed
+        Spark's own broadcast limit (``autoBroadcastJoinThreshold``, 10 MiB
+        by default: a ~2.2M-URL frontier at 1% fpp); the bitmap is then
+        sharded instead of broadcast.  A disabled limit (-1) always
+        shards."""
+        m_bits, _k = BloomFilter.bits_for(_bloom_capacity(known_estimate),
+                                          self.config.bloom_fpp)
+        limit = self.spark._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        return (m_bits + 7) // 8 > limit
 
     def _pinned(self, name: str, schema):
         ckpt = self.store.read_checkpoint() or {"snapshots": {}}
@@ -331,21 +312,22 @@ class CrawlDriver:
             t0 = now
 
         # the seen-bloom is built over the frontier AS PINNED — fully
-        # independent of this wave's dequeue/extract.  Two regimes:
-        # - broadcast (small/medium seen set): built on a driver thread
-        #   concurrently with the wave body, joined right before the
-        #   enqueue prune needs it
-        # - sharded (seen estimate >= bloom_shard_min): the bitmap never
-        #   exists whole anywhere — build_bloom_shards stays a lazy
-        #   DataFrame and the probe is a shard-local cogroup inside the
-        #   prune job itself, so there is nothing to precompute
+        # independent of this wave's dequeue/extract.  Two regimes, picked
+        # by bitmap size (_shard_seen_filter):
+        # - broadcast (bitmap under Spark's broadcast limit): built on a
+        #   driver thread concurrently with the wave body, joined right
+        #   before the enqueue prune needs it
+        # - sharded (bitmap over it): the bitmap never exists whole
+        #   anywhere — build_bloom_shards stays a lazy DataFrame and the
+        #   probe is a shard-local cogroup inside the prune job itself, so
+        #   there is nothing to precompute
         from concurrent.futures import ThreadPoolExecutor
 
         known_estimate = max(1000, frontier_estimate)
         bloom_pool = None
         bloom_future = None
         bloom_shards = None
-        if frontier_estimate >= self.config.bloom_shard_min:
+        if self._shard_seen_filter(known_estimate):
             bloom_shards = self._bloom_shards_for_wave(
                 frontier, wave, known_estimate)
         else:
@@ -353,10 +335,10 @@ class CrawlDriver:
             bloom_future = bloom_pool.submit(
                 self._bloom_for_wave, frontier, wave, known_estimate)
 
-        # cache the batch BEFORE the global ordering: wave_pos is only
-        # consumed by the seen-ordering append, and wave_order's
-        # distributed strategy (count + range sampling) re-reads its
-        # input — against the cache those re-reads are free
+        # cache the batch BEFORE the global ordering: the fetch join, the
+        # misses anti-join and wave_order's distributed strategy (range
+        # sampling) all re-read it — against the cache those re-reads are
+        # free
         batch = scheduler.per_host_budget_batch(eligible).cache()
         wave_caches: list = [batch]
         try:
@@ -387,21 +369,11 @@ class CrawlDriver:
                    seen_count, frontier_estimate, bloom_future, bloom_shards,
                    wave_caches, tick, ticks, recrawl_pending=0):
         # ONE materializing job, fully parallel: count() populates the
-        # batch cache using every core; the small-batch regime then reads
-        # the url list back from the hot cache as one Arrow transfer.
-        # (The previous limit-probed collect ramped through partitions
-        # serially — CollectLimit's incremental execution runs 1
-        # partition, then 4x more, ... each round on a fraction of the
-        # cores — a per-wave serial cost that ate N->4N scaling.)
+        # batch cache using every core; no url ever touches the driver
         batch_n = batch.count()
-        if batch_n == 0:
-            tick("dequeue")
-            return {"wave": wave, "fetched": 0, "done": True}
-        if batch_n <= self.config.url_collect_max:
-            batch_urls_list = batch.select("url").toPandas()["url"].tolist()
-        else:
-            batch_urls_list = None
         tick("dequeue")
+        if batch_n == 0:
+            return {"wave": wave, "fetched": 0, "done": True}
         # force-recrawl rows in this batch (counted against the cached
         # batch — a tiny job, and only ever run while a recrawl is live)
         n_recrawl = 0
@@ -409,23 +381,13 @@ class CrawlDriver:
             n_recrawl = batch.filter(F.col("status") == "recrawl").count()
 
         # --- fetch simulation + extract -------------------------------
-        # The stored-pages scan is the sandbox stand-in for network fetch.
-        # Two physical forms, gated on batch size (config.url_collect_max):
-        # - small (REST-budget regime): the batch url set rides a broadcast
-        #   variable and the membership test runs INSIDE the extract UDF,
-        #   so the heavy html column never shuffles and never leaves the
-        #   scan -> Arrow columnar fast path (see extract_pages docstring)
-        # - large (throughput regime, millions of URLs/wave at the 10^10
-        #   design point): NO url ever touches the driver — the thin
-        #   batch url projection joins the pages table left_semi (AQE
-        #   picks broadcast vs shuffle), then extraction runs over the
-        #   joined rows
-        hits = self.pages.select("url", "html")
-        if batch_urls_list is not None:
-            hits_kwargs = {"url_filter": batch_urls_list}
-        else:
-            hits = hits.join(batch.select("url"), on="url", how="left_semi")
-            hits_kwargs = {}
+        # The stored-pages scan is the sandbox stand-in for network fetch:
+        # the thin batch url projection joins the pages table left_semi
+        # (AQE picks broadcast vs shuffle), then extraction runs over the
+        # joined rows.  Same plan at every wave size, from a handful of
+        # REST-budget URLs to millions per wave at the 10^10 design point.
+        hits = self.pages.select("url", "html").join(
+            batch.select("url"), on="url", how="left_semi")
 
         # ONE extraction pass, written ONCE: the wave's entries append IS
         # the staged extraction output (content/text would thrash executor
@@ -434,9 +396,7 @@ class CrawlDriver:
         # columns).  The appended delta dir is read back directly
         # (incremental-scan analog); the snapshot only enters the
         # checkpoint at the atomic commit below.
-        entries_new = extract_pages(
-            hits, self.catalog_items, **hits_kwargs,
-        ).select(
+        entries_new = extract_pages(hits, self.catalog_items).select(
             "url",
             F.col("og_title").alias("title"),
             F.col("og_description").alias("description"),
@@ -536,14 +496,9 @@ class CrawlDriver:
         # path; as a pool task it overlaps the seen/derived-table writes
         def build_frontier_next() -> DataFrame:
             if bloom_shards is not None:
-                if self.config.seen_filter == "cuckoo":
-                    from .cuckoo import prune_with_cuckoo_shards as prune_sh
-                else:
-                    prune_sh = prune_with_bloom_shards
-                new_urls = prune_sh(
+                new_urls = prune_with_bloom_shards(
                     with_url_hash(links), frontier.select("url"), bloom_shards,
-                    n_shards=self.config.bloom_n_shards,
-                    cache_registry=wave_caches)
+                    n_shards=self._shards_n)
             else:
                 new_urls = prune_with_bloom(
                     with_url_hash(links), frontier.select("url"),
@@ -601,8 +556,6 @@ class CrawlDriver:
             seen_new = (
                 scheduler.wave_order(
                     src,
-                    distributed_threshold=self.config.wave_order_threshold,
-                    cache_registry=wave_caches,
                     # the batch count is already known (the dequeue's one
                     # materializing job) — skip wave_order's own count;
                     # a live recrawl changes the row set, so only then is
@@ -793,12 +746,7 @@ class CrawlDriver:
         # which the incremental bloom already believes it covers — drop
         # the bitmap so the next wave rebuilds (recrawl is an API-sized
         # rare path; correctness over the incremental saving)
-        self._bloom = None
-        self._bloom_covers = -1
-        self._bloom_capacity = 0
-        self._bloom_shards = None
-        self._shards_covers = -1
-        self._shards_capacity = 0
+        self._drop_held_blooms()
         counters["recrawl"] = int(counters.get("recrawl", 0)) + n_flip
         counters["frontier_estimate"] = int(
             counters.get("frontier_estimate", 0)) + n_new

@@ -40,8 +40,7 @@ def valid_entry_predicate():
 
 def crawl_feeds(spark: SparkSession, feeds: DataFrame, feed_entries: DataFrame,
                 pages: DataFrame, catalog_items: dict,
-                existing_entries: DataFrame | None = None,
-                url_collect_max: int = 100_000) -> dict:
+                existing_entries: DataFrame | None = None) -> dict:
     """One feed sweep; returns {"entries": df, "enclosures": df,
     "report": df} (report = per-feed counters, the rss_crawler stdout
     analog, reference src/rss_crawler.rs:25-33)."""
@@ -74,18 +73,11 @@ def crawl_feeds(spark: SparkSession, feeds: DataFrame, feed_entries: DataFrame,
     # the scraped content replaces the feed-provided content
     # (update_with_feed_entry sets it, playlistify overwrites it —
     # entry.rs:315 then entry.rs:338)
-    cand = cand.drop("content").cache()
-    # small sweeps broadcast the url set into the UDF (Arrow fast path);
-    # large sweeps stay fully distributed: thin left_semi join, no URL
-    # ever materialized on the driver (same gate as CrawlDriver)
-    n_urls = cand.select("url").distinct().count()
-    if n_urls <= url_collect_max:
-        urls = [r.url for r in cand.select("url").distinct().collect()]
-        extracted = extract_pages(pages, catalog_items, url_filter=urls)
-    else:
-        hits = pages.join(cand.select("url").distinct(),
-                          on="url", how="left_semi")
-        extracted = extract_pages(hits, catalog_items)
+    cand = cand.drop("content")
+    # fetch = thin left_semi join of the stored pages against the sweep's
+    # urls (the CrawlDriver fetch plan): no url touches the driver
+    hits = pages.join(cand.select("url"), on="url", how="left_semi")
+    extracted = extract_pages(hits, catalog_items)
 
     joined = cand.join(extracted, on="url", how="left")
     entries = joined.select(

@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 
 DEFAULT_MAX_PER_WAVE = 16
 SALT_BUCKETS = 8
+# wave_order keeps the single global window up to this many rows; the
+# distributed rank costs ~5 extra Spark jobs per wave, which only pays
+# once one partition can no longer sort the batch cheaply
+WAVE_ORDER_WINDOW_MAX = 2048
 
 
 def with_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
@@ -69,28 +73,21 @@ def per_host_budget_batch(candidates: DataFrame) -> DataFrame:
             .filter(F.col("host_rank") <= F.col("max_per_wave")))
 
 
-def wave_order(batch: DataFrame, distributed_threshold: int | None = 2048,
-               cache_registry: list | None = None,
-               n_rows: int | None = None) -> DataFrame:
+def wave_order(batch: DataFrame, n_rows: int | None = None) -> DataFrame:
     """Deterministic in-wave sequence: rank by (priority DESC, url ASC).
 
-    Two physical strategies, same result:
+    Two physical strategies, same result, picked by row count:
 
-    - small batches (REST-budget regime, ≤ Σ host budgets): one global
-      row_number window — a single post-shuffle partition, fine for
-      thousands of rows.
-    - large batches (throughput-mode budgets; millions of URLs at the
-      10^10 design point): a single-partition sort is a serial
-      bottleneck, so compute the global rank WITHOUT one:
-      range-repartition on the sort key, row_number within each range
-      partition, then add per-partition offsets (prefix sums of the tiny
-      per-partition counts).  Every stage is distributed; the only driver
-      data is one count per partition.
-
-    ``distributed_threshold`` selects the strategy: ``None`` forces the
-    single-window form (no count job at all); ``0`` forces the
-    distributed form for any non-empty input; otherwise the input row
-    count picks the side.
+    - up to ``WAVE_ORDER_WINDOW_MAX`` rows (REST-budget regime): one
+      global row_number window — a single post-shuffle partition, fine
+      for thousands of rows and the fewest Spark jobs.
+    - above it (throughput-mode budgets; millions of URLs at the 10^10
+      design point): a single-partition sort is a serial bottleneck, so
+      compute the global rank WITHOUT one: range-repartition on the sort
+      key, row_number within each range partition, then add
+      per-partition offsets (prefix sums of the tiny per-partition
+      counts).  Every stage is distributed; the only driver data is one
+      count per partition.
 
     Recompute hazard (and why it cannot bite): ``repartitionByRange``
     samples its boundaries and ``spark_partition_id`` is
@@ -99,19 +96,15 @@ def wave_order(batch: DataFrame, distributed_threshold: int | None = 2048,
     global sequence.  The frame is therefore pinned with
     ``localCheckpoint(eager=True)``: blocks are materialized once and the
     lineage is TRUNCATED, so a lost block fails the job fast instead of
-    silently recomputing a different assignment.  (``cache_registry`` is
-    kept for API compatibility; checkpoint blocks are GC-managed and need
-    no explicit unpersist.)
+    silently recomputing a different assignment.
 
     ``n_rows``: the caller's already-known row count (the crawl driver
     counts its batch once per wave anyway) — passing it skips this
     function's own count job.
     """
     w = Window.orderBy(F.desc("priority"), F.asc("url"))
-    if distributed_threshold is None:
-        return batch.withColumn("wave_pos", F.row_number().over(w))
     n = batch.count() if n_rows is None else int(n_rows)
-    if n <= int(distributed_threshold):
+    if n <= WAVE_ORDER_WINDOW_MAX:
         return batch.withColumn("wave_pos", F.row_number().over(w))
 
     ranged = batch.repartitionByRange(

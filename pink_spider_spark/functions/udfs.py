@@ -79,7 +79,7 @@ EXTRACT_SCHEMA = T.StructType([
 
 def extract_pages(df: DataFrame, catalog_items: dict | None = None,
                   html_col: str = "html", url_col: str = "url",
-                  url_filter=None, passthrough_cols: list | None = None) -> DataFrame:
+                  passthrough_cols: list | None = None) -> DataFrame:
     """Run the extraction pipeline over a pages DataFrame.
 
     Input needs (url, html); output one row per (selected) input row with
@@ -90,18 +90,13 @@ def extract_pages(df: DataFrame, catalog_items: dict | None = None,
     ``passthrough_cols``: input columns copied onto the output rows
     (e.g. ``warc_ts`` for streaming windowed rollups).
 
-    ``url_filter``: optional collection of URLs; rows outside it are
-    dropped INSIDE the UDF (membership set rides a broadcast variable).
-    This deliberately replaces a broadcast hash join for wave batches:
-    joining before a pandas UDF forces the scan's columnar batches through
-    row-by-row Arrow re-batching of the fat html strings (~5x slower),
-    while the in-UDF filter keeps the scan -> Arrow fast path intact.
+    To extract a subset of the pages, join it first (the crawl driver's
+    fetch is a ``left_semi`` join of pages against the wave's urls); the
+    rows reach the UDF through the same Arrow hand-off either way.
     """
     spark = df.sparkSession
     ensure_package_shipped(spark)
     b_items = spark.sparkContext.broadcast(catalog_items or {})
-    b_filter = (spark.sparkContext.broadcast(set(url_filter))
-                if url_filter is not None else None)
     passthrough = list(passthrough_cols or [])
     out_schema = T.StructType(EXTRACT_SCHEMA.fields + [
         df.schema[c] for c in passthrough])
@@ -112,10 +107,7 @@ def extract_pages(df: DataFrame, catalog_items: dict | None = None,
         from pink_spider_spark.providers import Catalog
 
         catalog = Catalog(b_items.value)
-        want = b_filter.value if b_filter is not None else None
         for pdf in batches:
-            if want is not None:
-                pdf = pdf[pdf[url_col].isin(want)]
             extras = {c: list(pdf[c]) for c in passthrough}
             out = []
             for url, html in zip(pdf[url_col], pdf[html_col]):

@@ -6,6 +6,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# default driver heap: this share of physical RAM, capped.  A fixed size
+# either starves a big host or gets the JVM OOM-killed on a small one;
+# SPARK_GRAFT_DRIVER_MEM overrides.
+DRIVER_MEM_SHARE = 0.4
+DRIVER_MEM_CAP_MB = 24 * 1024
+DRIVER_MEM_FALLBACK_MB = 2 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default sized from MemTotal: 40% of
+    physical RAM, capped at 24g, never above MemTotal.  Hosts without
+    ``/proc/meminfo`` get a conservative 2g."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{DRIVER_MEM_FALLBACK_MB}m"
+    mb = min(int(total_kb / 1024 * DRIVER_MEM_SHARE), DRIVER_MEM_CAP_MB)
+    return f"{max(mb, 1)}m"
+
 
 def get_spark(app_name: str = "pink-spider-spark",
               master: str | None = None,
@@ -60,7 +81,9 @@ def get_spark(app_name: str = "pink-spider-spark",
                                "16m" if master.startswith("local") else "128m"))
         .config("spark.sql.files.openCostInBytes",
                 os.environ.get("SPARK_GRAFT_OPEN_COST", "1m"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         # zstd over the snappy default: the crawl's dominant stage writes
         # multi-GB entry deltas (html-derived content/text); disk
         # bandwidth is the one resource that does NOT grow with executor

@@ -78,15 +78,11 @@ def main():
     ap.add_argument("--gen-only", action="store_true",
                     help="generate the corpus then exit (pre-gen at high parallelism)")
     ap.add_argument("--at-scale", action="store_true",
-                    help="force the 10^10-design-point code paths regardless of "
-                         "batch size: sharded bloom (bloom_shard_min=0), "
-                         "distributed wave order (wave_order_threshold=0), and "
-                         "the no-driver-url-list fetch join (url_collect_max=0)")
-    ap.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
-                    default="bloom",
-                    help="sharded seen-filter backend (cuckoo = crawl/"
-                         "cuckoo.py; only meaningful with --at-scale, which "
-                         "activates the sharded regime)")
+                    help="force the sharded seen-bloom (the 10^10-design-point "
+                         "form) regardless of crawl size, by lowering the "
+                         "session's spark.sql.autoBroadcastJoinThreshold "
+                         "below the smallest bloom build; the wave order "
+                         "follows batch size either way")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -98,9 +94,13 @@ def main():
                                                  seed_urls)
     from pink_spider_spark.sources.tables import TableStore
 
+    # the driver shards the seen-bloom once its bitmap outgrows the
+    # broadcast limit; 1 KB is below any bloom it builds
+    scale_conf = ({"spark.sql.autoBroadcastJoinThreshold": "1k"}
+                  if args.at_scale else None)
     spark = get_spark(app_name=f"crawl-bench-{args.cpus}",
                       master=f"local[{args.cpus}]",
-                      shuffle_partitions=args.cpus)
+                      shuffle_partitions=args.cpus, extra_conf=scale_conf)
     items = build_catalog_items()
 
     data_dir = args.data_dir or tempfile.mkdtemp(prefix="bench_pages_")
@@ -132,27 +132,21 @@ def main():
 
     root = tempfile.mkdtemp(prefix="crawl_bench_state_")
     store = TableStore(root)
-    scale_kwargs = {}
-    if args.at_scale:
-        scale_kwargs = dict(bloom_shard_min=0, wave_order_threshold=0,
-                            url_collect_max=0)
-    if args.seen_filter != "bloom":
-        scale_kwargs["seen_filter"] = args.seen_filter
     driver = CrawlDriver(spark, store, pages, robots, items,
-                         CrawlConfig(max_depth=args.depth, max_waves=50,
-                                     **scale_kwargs))
+                         CrawlConfig(max_depth=args.depth, max_waves=50))
 
     # steady-state throughput: warm the FULL wave machinery before timing
     # — python workers, whole-stage codegen for the window/dequeue plans,
     # parquet write paths, bloom UDF, and one whole-table scan for the OS
     # page cache.  Cluster start-up cost, excluded identically at every
     # parallelism level (the same exclusion a real cluster bench makes);
-    # the tiny wave runs on a throwaway state dir.
+    # the tiny wave runs on a throwaway state dir.  At 500 URLs it takes
+    # the single-window wave order; a timed wave above
+    # scheduler.WAVE_ORDER_WINDOW_MAX pays the range-rank plan's codegen
+    # once, in its first wave.
     warm_root = tempfile.mkdtemp(prefix="crawl_bench_warm_")
-    warm_kwargs = dict(scale_kwargs)
-    warm_kwargs["wave_order_threshold"] = 0
     warm = CrawlDriver(spark, TableStore(warm_root), pages, robots, items,
-                       CrawlConfig(max_depth=0, max_waves=1, **warm_kwargs))
+                       CrawlConfig(max_depth=0, max_waves=1))
     warm.run(seed_urls(min(500, args.seeds), args.hosts))
     shutil.rmtree(warm_root, ignore_errors=True)
 
@@ -175,7 +169,6 @@ def main():
 
     out = {
         "mode": "at_scale" if args.at_scale else "default",
-        "seen_filter": args.seen_filter,
         "cpus": args.cpus,
         "pages": args.pages,
         "weight": args.weight,

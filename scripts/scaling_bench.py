@@ -74,8 +74,8 @@ def main():
     ap.add_argument("--data-dir", default="/tmp/scaling_corpus")
     ap.add_argument("--at-scale", action="store_true",
                     help="run every level with crawl_bench --at-scale (the "
-                         "10^10-design-point code paths: sharded bloom, "
-                         "distributed wave order, no driver url list)")
+                         "sharded seen-bloom, forced by a lowered broadcast "
+                         "threshold)")
     ap.add_argument("--log-dir", default=None,
                     help="save each run's full stdout (incl. per-stage "
                          "ticks, SPARK_GRAFT_TIMING=1) to this directory")
@@ -195,7 +195,7 @@ Same wave job, same deterministic corpus ({args.pages} pages, weight
 {args.weight} ≈ real-page extraction cost, {args.seeds} seeds, depth
 {args.depth}); {args.reps} interleaved repetitions per level, best run
 kept across attempts at engine rev {rev}; crawl config mode:
-{"at_scale (sharded bloom cogroup probe, distributed wave order, no driver url list — the 10^10-design-point paths)" if args.at_scale else "default (broadcast bloom, in-UDF url membership)"}.
+{"at_scale (sharded bloom cogroup probe, forced by a lowered broadcast threshold)" if args.at_scale else "default (seen-bloom form chosen by size)"}.
 
 Methodology note: this sandbox VM's effective CPU capacity fluctuates
 ~3x over minutes with hypervisor neighbors.  Each run therefore records

@@ -3,4 +3,4 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.spark_fixtures import spark  # noqa: E402,F401
+from tests.spark_fixtures import sharded_seen_filter, spark  # noqa: E402,F401

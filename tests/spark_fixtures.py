@@ -11,3 +11,19 @@ def spark():
                   shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def sharded_seen_filter(spark):
+    """Force the crawl driver's sharded seen-bloom: lower the session's
+    broadcast limit below the smallest full bloom build (~117 KB), so the
+    driver judges the bitmap too large to broadcast.  Restores the
+    previous setting afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "1k")
+    yield
+    if before is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, before)

@@ -112,7 +112,7 @@ def _shards_cover_frontier(spark, d: CrawlDriver) -> bool:
     shards = {r.shard: BloomFilter(r.m_bits, r.k,
                                    np.frombuffer(bytes(r.bitmap), dtype=_U64))
               for r in d._bloom_shards.collect()}
-    n_shards = d.config.bloom_n_shards
+    n_shards = d._shards_n
     rows = (d._pinned("frontier", schemas.FRONTIER_SCHEMA)
             .filter(F.col("discovered_wave") <= d._shards_covers)
             .select("url_hash").toPandas()["url_hash"]
@@ -126,15 +126,14 @@ def _shards_cover_frontier(spark, d: CrawlDriver) -> bool:
 
 
 @pytest.fixture()
-def sharded_driver(spark):
+def sharded_driver(spark, sharded_seen_filter):
     items = build_catalog_items()
     pages = gen_pages_spark(spark, 120, items).cache()
     pages.count()
     robots = spark.createDataFrame(robots_rows())
     root = tempfile.mkdtemp(prefix="bloom_shard_incr_")
     d = CrawlDriver(spark, TableStore(root), pages, robots, items,
-                    CrawlConfig(max_depth=2, max_waves=20,
-                                bloom_shard_min=0, bloom_n_shards=8))
+                    CrawlConfig(max_depth=2, max_waves=20))
     yield d
     pages.unpersist()
     shutil.rmtree(root, ignore_errors=True)
@@ -147,6 +146,10 @@ def test_sharded_bloom_incremental_across_waves(spark, sharded_driver):
     d.run_wave()
     first = d._bloom_shards
     assert first is not None and d._shards_covers == 0
+    # shard count = the session's shuffle partitions, carried by the rows
+    assert d._shards_n == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert {r.n_shards for r in first.select("n_shards").collect()} \
+        == {d._shards_n}
     assert _shards_cover_frontier(spark, d)
     d.run_wave()
     # a new (update) DataFrame each wave, built ON the held one — covers
@@ -160,14 +163,19 @@ def test_sharded_bloom_matches_full_crawl_parity(spark, sharded_driver):
     identical seen set as the (already parity-pinned) broadcast path."""
     d = sharded_driver
     d.run(seed_urls(6))
+    assert d._bloom_shards is not None and d._bloom is None
     seen_shard = {(r.url, r.first_wave, r.seq)
                   for r in d.store.table("seen").read(spark).collect()}
 
+    # the reference crawl takes the broadcast regime: lift the lowered
+    # limit (the fixture restores its own setting afterwards)
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     root2 = tempfile.mkdtemp(prefix="bloom_bcast_ref_")
     d2 = CrawlDriver(spark, TableStore(root2), d.pages, d.robots,
                      d.catalog_items,
                      CrawlConfig(max_depth=2, max_waves=20))
     d2.run(seed_urls(6))
+    assert d2._bloom is not None and d2._bloom_shards is None
     seen_bcast = {(r.url, r.first_wave, r.seq)
                   for r in d2.store.table("seen").read(spark).collect()}
     shutil.rmtree(root2, ignore_errors=True)

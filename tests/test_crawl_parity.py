@@ -182,46 +182,20 @@ def test_resume_from_checkpoint(spark, corpus):
         shutil.rmtree(root_b, ignore_errors=True)
 
 
-def test_distributed_fetch_path_parity(spark, corpus):
-    """url_collect_max=0 forces the scale path: batch urls join the pages
-    table left_semi and NO url list is ever collected to the driver.  The
-    final seen set/ordering and extracted text must be identical to the
-    simulator (and hence to the default broadcast-set path)."""
-    items, pages_df, robots_df, pages_map, robots_map = corpus
-    root = tempfile.mkdtemp(prefix="crawl_dist_")
-    try:
-        store = TableStore(root)
-        driver = CrawlDriver(
-            spark, store, pages_df, robots_df, items,
-            CrawlConfig(max_depth=MAX_DEPTH, max_waves=20, url_collect_max=0))
-        driver.run(seed_urls(N_SEEDS))
-        sim = simulate(pages_map, robots_map, items, seed_urls(N_SEEDS),
-                       max_depth=MAX_DEPTH, max_waves=20)
-        seen_spark = {r.url: (r.first_wave, r.seq)
-                      for r in store.table("seen").read(spark).collect()}
-        assert seen_spark == {u: (w, s) for (u, w, s) in sim.seen}
-        ent_spark = {r.url: r.text
-                     for r in store.table("entries").read(spark).collect()}
-        assert set(ent_spark) == set(sim.entries)
-        for u, e in sim.entries.items():
-            assert ent_spark[u] == e["text"]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_sharded_bloom_path_parity(spark, corpus):
-    """bloom_shard_min=0 forces the sharded seen-filter (cogroup probe,
-    no broadcast bitmap, no driver bitmap).  Final seen set/ordering and
-    extracted text must be identical to the simulator."""
+def test_sharded_bloom_path_parity(spark, corpus, sharded_seen_filter):
+    """A broadcast limit below the bloom's size forces the sharded
+    seen-filter (cogroup probe, no broadcast bitmap, no driver bitmap).
+    Final seen set/ordering and extracted text must be identical to the
+    simulator."""
     items, pages_df, robots_df, pages_map, robots_map = corpus
     root = tempfile.mkdtemp(prefix="crawl_shardbloom_")
     try:
         store = TableStore(root)
         driver = CrawlDriver(
             spark, store, pages_df, robots_df, items,
-            CrawlConfig(max_depth=MAX_DEPTH, max_waves=20,
-                        bloom_shard_min=0, bloom_n_shards=8))
+            CrawlConfig(max_depth=MAX_DEPTH, max_waves=20))
         driver.run(seed_urls(N_SEEDS))
+        assert driver._bloom_shards is not None and driver._bloom is None
         sim = simulate(pages_map, robots_map, items, seed_urls(N_SEEDS),
                        max_depth=MAX_DEPTH, max_waves=20)
         seen_spark = {r.url: (r.first_wave, r.seq)
